@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .hashing import hex_prefix_long
+
 WEIGHT_MOD = 2001  # weights span -1000..1000
 WEIGHT_SCALE = 1000.0
 
@@ -55,9 +57,7 @@ def feature_array(text: Column) -> Column:
 def hashed_weight(feature: Column, model_id: str = "w") -> Column:
     """Deterministic integer weight in −1000..1000 from the feature's
     md5 — the hashing-trick weight lookup, collapsed to an expression."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{model_id}:"), feature)), 1, 4), 16, 10
-    ).cast("long")
+    h = hex_prefix_long(F.md5(F.concat(F.lit(f"{model_id}:"), feature)), 4)
     return h % WEIGHT_MOD - (WEIGHT_MOD - 1) // 2
 
 

@@ -21,6 +21,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..partitioning import fan_out
+from .hashing import hex_digit
 
 
 def normalized(col: Column) -> Column:
@@ -536,13 +537,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("w"),
     )
     h = F.md5(F.col("w"))
-    # Value of hex digit at 1-based position i: instr over the hex alphabet.
-    def hexval(i):
-        return F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1
-
     bit_cols = []
     for p in range(bits):
-        digit = hexval(p // 4 + 1)
+        digit = hex_digit(F.substring(h, p // 4 + 1, 1))
         bit = F.shiftright(digit, 3 - p % 4).bitwiseAND(F.lit(1))
         bit_cols.append(F.sum(bit * 2 - 1).alias(f"b{p}"))
     sums = words.groupBy(id_col).agg(*bit_cols)

@@ -7,11 +7,14 @@ bit-for-bit. The math is one fixed polynomial — keep it in ONE place:
 a drifted copy (different digit lookup, different width) silently breaks
 an oracle, and the failure looks like a data bug, not a helper bug.
 
-New modules must import from here. Long-standing modules that predate
-this file carry their own oracle-pinned copies (``sketches._hex_val``,
-``dedup.simhash.hexval``, ``sampling._u52``, ``vector_store``'s crc
-bucketing); they are frozen by their oracles — migrate them only
-together with their SQL twins.
+Every Spark-side md5-hex → integer step in the package (embeddings,
+sketches, simhash, splits, sampling, KMV, the hashed classifier) goes
+through :func:`hex_digit` or :func:`hex_prefix_long`. Several DuckDB
+oracle builders (``*_sql``) spell the same polynomial out inline; they
+are the independent reference these helpers are checked against.
+The hyperplane-LSH plane constants are computed driver-side with
+``hashlib`` (``similarity.plane_component_value``) and inlined as
+literals in both engines.
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ roll up without revisiting data.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .hashing import hex_prefix_long, horner_hex_sql
 
@@ -50,12 +50,6 @@ _NCHARS = 13
 _SPACE = float(1 << (4 * _NCHARS))  # 2^52
 
 
-def _hex_long(h: Column, nchars: int = _NCHARS) -> Column:
-    """Numeric value of a lowercase hex prefix (shared canonical helper —
-    operators/hashing.py; no conv(), which DuckDB lacks)."""
-    return hex_prefix_long(h, nchars)
-
-
 def kmv_sample(df: DataFrame, value_col: str, k: int) -> DataFrame:
     """The KMV sketch of ``value_col``: the ``k`` smallest distinct
     md5-prefix hashes, as ``(h string, hv long)`` rows.
@@ -67,7 +61,7 @@ def kmv_sample(df: DataFrame, value_col: str, k: int) -> DataFrame:
     h = F.substring(F.md5(F.col(value_col).cast("string")), 1, _NCHARS)
     return (df.select(h.alias("h")).where(F.col("h").isNotNull()).distinct()
             .orderBy("h").limit(k)
-            .select("h", _hex_long(F.col("h")).alias("hv")))
+            .select("h", hex_prefix_long(F.col("h"), _NCHARS).alias("hv")))
 
 
 def kmv_estimate(sample: DataFrame, k: int) -> DataFrame:
@@ -88,7 +82,7 @@ def kmv_union_sample(a: DataFrame, b: DataFrame, k: int) -> DataFrame:
     sketches roll up losslessly."""
     return (a.select("h").unionByName(b.select("h")).distinct()
             .orderBy("h").limit(k)
-            .select("h", _hex_long(F.col("h")).alias("hv")))
+            .select("h", hex_prefix_long(F.col("h"), _NCHARS).alias("hv")))
 
 
 def kmv_set_estimates(a: DataFrame, b: DataFrame, k: int) -> DataFrame:
@@ -113,7 +107,8 @@ def kmv_set_estimates(a: DataFrame, b: DataFrame, k: int) -> DataFrame:
     au = a.select("h", "hv").withColumn("in_a", F.lit(1))
     bu = b.select("h", "hv").withColumn("in_b", F.lit(1))
     both = (au.join(bu.drop("hv"), "h", "full")
-            .select(F.coalesce(au["hv"], _hex_long(F.col("h"))).alias("hv"),
+            .select(F.coalesce(au["hv"], hex_prefix_long(F.col("h"), _NCHARS))
+                    .alias("hv"),
                     F.coalesce("in_a", F.lit(0)).alias("in_a"),
                     F.coalesce("in_b", F.lit(0)).alias("in_b"))
             .crossJoin(F.broadcast(theta))
@@ -156,7 +151,7 @@ def kmv_estimate_by(df: DataFrame, value_col: str, group_cols,
     w = Window.partitionBy(*group_cols).orderBy("h")
     top = (d.withColumn("_rk", F.row_number().over(w))
            .filter(F.col("_rk") <= k)
-           .select(*group_cols, _hex_long(F.col("h")).alias("hv")))
+           .select(*group_cols, hex_prefix_long(F.col("h"), _NCHARS).alias("hv")))
     agg = top.groupBy(*group_cols).agg(
         F.count("*").cast("long").alias("n_sample"),
         F.max("hv").alias("max_hv"))

@@ -33,6 +33,8 @@ from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .hashing import hex_prefix_long
+
 __all__ = ["stratified_sample", "stratified_sample_sql",
            "mixture_sample", "mixture_sample_sql",
            "temperature_budgets", "temperature_mixture_sample",
@@ -275,10 +277,8 @@ def upsample_by_epochs(df: DataFrame, source_col: str,
     output inherits the input partitioning. The explode multiplies rows
     map-side, which is exactly where you want the fan-out (never through
     a shuffle)."""
-    from .sharding import _hex_to_long
-
     h = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
-    u = _hex_to_long(h, 8)
+    u = hex_prefix_long(h, 8)
     n = None
     for src, w in epochs.items():
         whole, thresh = _epoch_copies(w)
@@ -346,9 +346,7 @@ def _u52(id_col: str, salt: str):
     over 2^52, +2^-53 to exclude zero — every value is an exact double,
     so ln(u) is bit-identical in any engine with the same libm."""
     h = _rank_hash(id_col, salt)
-    frac = F.conv(F.substring(h, 1, 13), 16, 10).cast("double") / F.lit(
-        float(2 ** 52)
-    )
+    frac = hex_prefix_long(h, 13).cast("double") / F.lit(float(2 ** 52))
     return frac + F.lit(2.0 ** -53)
 
 

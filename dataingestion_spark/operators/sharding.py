@@ -20,22 +20,13 @@ from __future__ import annotations
 
 from typing import Dict, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from .sketches import _hex_val
+from .hashing import hex_prefix_long
 
 # 8 hex chars = 32 bits of md5 → uniform integer in [0, 2^32)
 _SPLIT_BITS = 32
 _SPLIT_MOD = 1 << _SPLIT_BITS
-
-
-def _hex_to_long(h: Column, n_chars: int) -> Column:
-    """instr-based hex → integer — the canonical copy lives in
-    operators/hashing.py (no conv(): DuckDB 1.0 lacks it, and the same
-    construction must run in the oracle)."""
-    from .hashing import hex_prefix_long
-
-    return hex_prefix_long(h, n_chars)
 
 
 def hash_split(df: DataFrame, id_col: str = "doc_id",
@@ -52,7 +43,7 @@ def hash_split(df: DataFrame, id_col: str = "doc_id",
     if not all(w > 0 for w in weights.values()):
         raise ValueError("weights must be positive")
     h = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
-    u = _hex_to_long(h, _SPLIT_BITS // 4)
+    u = hex_prefix_long(h, _SPLIT_BITS // 4)
     expr = None
     cum = 0.0
     items = list(weights.items())
@@ -185,7 +176,7 @@ def kfold_assign(df: DataFrame, k: int, id_col: str = "doc_id",
     if k < 2:
         raise ValueError("k must be ≥ 2")
     h = F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string")))
-    u = _hex_to_long(h, _SPLIT_BITS // 4)
+    u = hex_prefix_long(h, _SPLIT_BITS // 4)
     return df.withColumn("fold", (u % k).cast("int"))
 
 

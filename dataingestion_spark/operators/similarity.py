@@ -45,8 +45,9 @@ def neg_euclidean(a: Column, b: Column) -> Column:
 def cosine_sim(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<numeric> columns, computed in double
     precision JVM-side (zip_with + aggregate fold). Works for any dimension;
-    note higher-order functions are *interpreted* in Spark — in quadratic
-    hot paths prefer :func:`dot_fixed` with a known dimension."""
+    note higher-order functions are *interpreted* in Spark, so quadratic
+    hot paths with a known dimension unroll the dot instead (see
+    :func:`topk_cosine_quantized`)."""
     ad = F.transform(a, lambda x: x.cast("double"))
     bd = F.transform(b, lambda x: x.cast("double"))
     dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -67,38 +68,16 @@ DISTANCE_FUNCTIONS = {
 }
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product as an explicit left-associated sum over a known dimension.
+def plane_component_value(p: int, d: int) -> float:
+    """Deterministic pseudo-random hyperplane component in [-1, 1): the
+    first md5 byte of 'p:d' scaled. Computed driver-side and inlined as a
+    literal by both :func:`hyperplane_bucket` and its SQL mirror.
+    byte/128 − 1 is dyadic, so the float is exact and its decimal literal
+    round-trips in any engine."""
+    import hashlib
 
-    Whole-stage-codegen-friendly (no higher-order functions) and bit-identical
-    to the aggregate fold with 0.0 init, since 0.0 + x == x exactly."""
-    terms = [a[d].cast("double") * b[d].cast("double") for d in range(dim)]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def norm_fixed(a: Column, dim: int) -> Column:
-    terms = [a[d].cast("double") * a[d].cast("double") for d in range(dim)]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return F.sqrt(out)
-
-
-def _hexval(h: Column, i: int) -> Column:
-    from .hashing import hex_digit
-
-    return hex_digit(F.substring(h, i, 1))
-
-
-def plane_component(p: int, d: int) -> Column:
-    """Deterministic pseudo-random hyperplane component in [-1, 1):
-    two md5 hex digits of 'p:d' scaled — identical in any engine with md5."""
-    h = F.md5(F.lit(f"{p}:{d}"))
-    byte = _hexval(h, 1) * 16 + _hexval(h, 2)
-    return (byte / F.lit(128.0)) - 1.0
+    byte = int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:2], 16)
+    return byte / 128.0 - 1.0
 
 
 def _plane_dots(vec: Column, dim: int, planes: int) -> list:
@@ -107,7 +86,7 @@ def _plane_dots(vec: Column, dim: int, planes: int) -> list:
     for p in range(planes):
         dot = None
         for d in range(dim):
-            term = vec[d].cast("double") * plane_component(p, d)
+            term = vec[d].cast("double") * F.lit(plane_component_value(p, d))
             dot = term if dot is None else dot + term
         dots.append(dot)
     return dots
@@ -624,18 +603,6 @@ def topk_cosine_quantized(corpus: DataFrame, queries: DataFrame, k: int = 10,
                ).otherwise(F.lit(0.0)).alias("score"),
     )
     return _rank_topk(scored, k, query_id, corpus_id)
-
-
-def plane_component_value(p: int, d: int) -> float:
-    """The exact value :func:`plane_component` evaluates to — computed
-    driver-side for SQL mirrors. byte/128 − 1 is dyadic, so the float is
-    exact and its decimal literal round-trips in any engine."""
-    import hashlib
-
-    h = hashlib.md5(f"{p}:{d}".encode()).hexdigest()
-    hv = "0123456789abcdef".index
-    byte = hv(h[0]) * 16 + hv(h[1])
-    return byte / 128.0 - 1.0
 
 
 def hyperplane_bucket_sql(vec_expr: str, dim: int, planes: int = 16) -> str:

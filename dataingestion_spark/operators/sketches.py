@@ -20,6 +20,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .hashing import hex_digit
+
 # 52 bits of rank stream = 13 hex chars after the 2 bucket chars.
 _RANK_HEX_CHARS = 13
 
@@ -31,11 +33,6 @@ _LZ_CASE = (
 )
 
 
-def _hex_val(col: Column) -> Column:
-    # instr over the hex alphabet: engine-agnostic hex digit → int
-    return F.instr(F.lit("0123456789abcdef"), col) - 1
-
-
 def hll_rank_bucket(value: Column, precision_bits: int = 8) -> tuple[Column, Column]:
     """(bucket, rank) for one value: bucket = first ``precision_bits`` of
     md5, rank = 1 + leading zeros of the next 52 bits. String/integer ops
@@ -43,7 +40,7 @@ def hll_rank_bucket(value: Column, precision_bits: int = 8) -> tuple[Column, Col
     if precision_bits != 8:
         raise ValueError("only p=8 is wired (bucket = first two hex chars)")
     h = F.md5(value.cast("string"))
-    bucket = (_hex_val(F.substring(h, 1, 1)) * 16 + _hex_val(F.substring(h, 2, 1)))
+    bucket = hex_digit(F.substring(h, 1, 1)) * 16 + hex_digit(F.substring(h, 2, 1))
     s = F.substring(h, 3, _RANK_HEX_CHARS)
     lz_hex = F.length(F.regexp_extract(s, "^0*", 0))
     first = F.substring(s, lz_hex + 1, 1)
@@ -155,7 +152,7 @@ def _hex_int(col: Column, start: int, nchars: int) -> Column:
     ``start`` — positional instr sums, identical in any SQL engine."""
     acc: Column = F.lit(0)
     for i in range(nchars):
-        acc = acc * 16 + _hex_val(F.substring(col, start + i, 1))
+        acc = acc * 16 + hex_digit(F.substring(col, start + i, 1))
     return acc
 
 

@@ -30,6 +30,7 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..model import CHUNKS_SCHEMA
+from ..operators.hashing import hex_prefix_long
 from ..operators.similarity import cosine_sim
 
 _BASE_COLS = {f.name for f in CHUNKS_SCHEMA.fields}
@@ -41,15 +42,18 @@ def fake_embedding(col: Column, dims: int = 8) -> Column:
     md5-derived byte of ``content ':' d`` scaled to [0,1). The Spark analog
     of the reference tests' fixed-vector TestEmbeddingGenerator
     (``test/.../Utils/TestEmbeddingGenerator.cs:12-28``) — but content-
-    sensitive, engine-reproducible, and computed JVM-side."""
-    def byte_at(d):
-        h = F.md5(F.concat(col, F.lit(f":{d}")))
-        hv = lambda i: F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1  # noqa: E731
+    sensitive, engine-reproducible, and computed JVM-side.
+
+    One ``transform`` over the dimension indices, so the expression (and
+    its analysis cost on the driver) does not grow with ``dims``."""
+    def byte_at(_, d):
+        h = F.md5(F.concat(col, F.lit(":"), d.cast("string")))
         # k/256 is exactly representable in float32 AND float64, so the
         # stored vector survives float→double round-trips bit-for-bit.
-        return (hv(1) * 16 + hv(2)).cast("double") / 256.0
+        return (hex_prefix_long(h, 2) / 256.0).cast("float")
 
-    return F.array(*[byte_at(d).cast("float") for d in range(dims)])
+    # array_repeat(·, 0) is [], where sequence(0, -1) would count down
+    return F.transform(F.array_repeat(F.lit(0), dims), byte_at)
 
 
 def build_vector_records(chunks_df: DataFrame,

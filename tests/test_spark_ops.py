@@ -12,6 +12,7 @@ from dataingestion_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
 from dataingestion_spark.operators.removal import remove_elements, remove_footers
 from dataingestion_spark.operators.similarity import topk_cosine, topk_cosine_ann
 from dataingestion_spark.sinks.vector_store import (
+    fake_embedding,
     read_vector_table,
     search,
     write_vector_table,
@@ -176,6 +177,31 @@ def test_search_self_match(spark, tmp_path):
     assert eu[0]["documentid"] == "x" and eu[0]["score"] == 0.0
     dot = search(table, qv, k=1, distance="dot").collect()
     assert dot[0]["documentid"] == "x"
+
+
+@pytest.mark.parametrize("dims", [0, 1, 8, 384])
+def test_fake_embedding_matches_md5_definition(spark, dims):
+    """Dimension d is the first md5 byte of ``content ':' d`` over 256;
+    null content gives an all-null vector and dims=0 gives []."""
+    import hashlib
+
+    texts = ["alpha", "héllo wörld", "", None]
+    df = spark.createDataFrame([(t,) for t in texts], "content string")
+    got = [r.e for r in df.select(
+        fake_embedding(F.col("content"), dims).alias("e")).collect()]
+    want = [
+        [None] * dims if t is None else
+        [int(hashlib.md5(f"{t}:{d}".encode()).hexdigest()[:2], 16) / 256.0
+         for d in range(dims)]
+        for t in texts
+    ]
+    assert got == want
+
+
+def test_fake_embedding_expression_size_independent_of_dims(spark):
+    small = len(str(fake_embedding(F.col("content"), 8)))
+    large = len(str(fake_embedding(F.col("content"), 384)))
+    assert abs(large - small) <= 4, (small, large)
 
 
 def test_token_chunk_text_no_trailing_loss(spark):
